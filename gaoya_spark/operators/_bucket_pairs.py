@@ -210,7 +210,7 @@ def sid_pairs_from_buckets(
         # blocks (and LRU eviction handles the interim).
         buckets = buckets.persist()
     raw = (
-        buckets.where(F.size("ids") <= array_bucket_limit)
+        buckets.where(F.size("ids") <= min(array_bucket_limit, drop_cap))
         .select(
             F.lit(1).cast("long").alias("nb"),
             F.explode(pairs_from_sorted_ids(F.col("ids"))).alias("p"),

@@ -237,7 +237,9 @@ def _bucket_verify_fn(bc, need, max_pairs: int = 4_000_000):
 _SET_ID_SALT = 0x51C3_9A7B_42D8_11E5
 
 
-def _replicated_dedup_fn(bc, need, b, r, n_parts, max_pairs: int = 4_000_000):
+def _replicated_dedup_fn(
+    bc, need, b, r, n_parts, bucket_cap_hard: int, max_pairs: int = 4_000_000
+):
     """mapInPandas kernel over a 1-row-per-partition range frame: the
     FULLY-REPLICATED dedup. Every task recomputes the corpus's band keys
     from the broadcast signature matrix (the same splitmix64 fold as
@@ -258,7 +260,9 @@ def _replicated_dedup_fn(bc, need, b, r, n_parts, max_pairs: int = 4_000_000):
     distinct set is verified exactly once cluster-wide (assignment is by
     set identity, so cross-band repeats of a family collapse for free),
     and pairs shared by overlapping sets are deduped by the caller's
-    dropDuplicates. Members arrive row-index-sorted (rows are sid-sorted
+    dropDuplicates. Buckets larger than bucket_cap_hard are excluded,
+    exactly as in the fused and JVM paths (band_stats counts them as
+    n_dropped). Members arrive row-index-sorted (rows are sid-sorted
     in the broadcast), so emitted pairs are (least, greatest) in sid
     order like every other path."""
     import numpy as np
@@ -271,8 +275,9 @@ def _replicated_dedup_fn(bc, need, b, r, n_parts, max_pairs: int = 4_000_000):
 
     def segments():
         """(memb, lens, seg_starts, h1, h2): flat member row indices of
-        every kept (size >= 2) bucket across all bands, per-segment
-        lengths/starts, and the 128-bit set-identity words."""
+        every kept (2 <= size <= bucket_cap_hard) bucket across all
+        bands, per-segment lengths/starts, and the 128-bit set-identity
+        words."""
         sids_b, mat_b, _ = bc.value
         n = len(sids_b)
         memb_parts, len_parts = [], []
@@ -299,7 +304,7 @@ def _replicated_dedup_fn(bc, need, b, r, n_parts, max_pairs: int = 4_000_000):
                 starts = np.concatenate([np.zeros(1, np.int64), cut])
                 ends = np.concatenate([cut, np.full(1, n, np.int64)])
                 sizes = ends - starts
-                keep = sizes >= 2
+                keep = (sizes >= 2) & (sizes <= bucket_cap_hard)
                 ks, kl = starts[keep], sizes[keep]
                 if not len(ks):
                     continue
@@ -871,6 +876,7 @@ class MinHashLSH:
         persist: bool = True,
         bc=None,
         parallelism: int | None = None,
+        bucket_cap_hard: int = 100_000,
     ) -> DataFrame | None:
         """Fully-replicated dedup (see _replicated_dedup_fn): every task
         rebuilds the corpus's bucket structure from the broadcast matrix
@@ -880,6 +886,8 @@ class MinHashLSH:
         broadcast-verify family). Identical-set collapse is free
         (assignment is by 128-bit set identity), so it subsumes both the
         raw pipeline's minimal machinery and the fused path's collapse.
+        Buckets over bucket_cap_hard are excluded like in every other
+        path.
 
         Same guards as every numpy strategy (broadcast bound, sid
         collision) plus its own key-count bound (_REPL_MAX_KEYS); returns
@@ -901,7 +909,8 @@ class MinHashLSH:
         id_sql = sig_df.schema["id"].dataType.simpleString()
         base = spark.range(0, p, 1, p)
         survivors = base.mapInPandas(
-            _replicated_dedup_fn(bc, need, b, r, p), "src long, dst long"
+            _replicated_dedup_fn(bc, need, b, r, p, bucket_cap_hard),
+            "src long, dst long",
         )
         # explicit p-partition hash repartition on the dedup key: the
         # dropDuplicates groupBy reuses it (no second exchange), and the
@@ -979,7 +988,7 @@ class MinHashLSH:
         if persist:
             buckets = buckets.persist()
         sz = F.size("ids")
-        small = buckets.where(sz <= max_bucket_size).select("ids")
+        small = buckets.where(sz <= min(max_bucket_size, bucket_cap_hard)).select("ids")
         # over-limit buckets: collapse identical member sets (the hot
         # boilerplate family repeats its bucket in every band — one verify
         # instead of b), medium sets to the fused kernel, huge ones to the
@@ -1141,12 +1150,12 @@ class MinHashLSH:
         if kw.get("persist", True) and not _is_materialized(sig_df):
             sig_df = sig_df.persist()
         if numpy_verify and not keep_sim:
-            # strategy resolution: True = ADAPTIVE (raw for sparse
-            # corpora, fused for dense — decided by the driver-side
-            # density probe on the broadcast matrix, exact results either
-            # way); "agg" | "raw" | "fused" force a specific plan.
-            # raw_candidates=True with numpy_verify=True keeps meaning
-            # "raw" (back-compat with existing callers).
+            # strategy resolution: True = ADAPTIVE by key count — the
+            # replicated kernel while rows * num_bands <=
+            # _REPL_PREFER_KEYS, the fused kernel above it (exact results
+            # either way); "agg" | "raw" | "fused" | "replicated" force a
+            # specific plan. raw_candidates=True with numpy_verify=True
+            # keeps meaning "raw" (back-compat with existing callers).
             nv = numpy_verify
             if nv is True:
                 nv = "raw" if raw_candidates else None
@@ -1192,6 +1201,7 @@ class MinHashLSH:
                     out = self._replicated_dedup(
                         sig_df, t, max_rows=numpy_max_rows,
                         persist=kw.get("persist", True), bc=bc,
+                        bucket_cap_hard=kw.get("bucket_cap_hard", 100_000),
                     )
                     if out is not None:
                         return out

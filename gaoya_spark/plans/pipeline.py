@@ -5,6 +5,7 @@ Stages (each a checkpointed warehouse table; any run resumes mid-pipeline):
   1. minhash_signatures   — caption shingles (+ phash byte tokens) -> sig
   2. simhash_signatures   — caption tokens with phash bit voting -> sig64
   3. minhash_edges        — banded LSH pairs verified >= jaccard threshold
+                            on the broadcast numpy kernels (see below)
   4. simhash_edges        — Hamming-ball pairs, strict < max_distance
   5. substring_edges      — exact >=L-char shared-substring pairs (optional)
   6. edges                — union of edge sources, deduped
@@ -18,6 +19,14 @@ never shuffled (column pruning at the parquet/Iceberg scan). Edges are the
 only quadratic-risk stage and are guarded by hot-bucket triangle blocking.
 Labels iterate over edges only (bytes untouched). The optional PSNR/caption
 invariant check (verify_invariants) decodes pixels for a sampled fraction.
+
+MinHash edges come from dedup_pairs(keep_sim=False, numpy_verify=True):
+the replicated kernel while rows x bands <= MinHashLSH._REPL_PREFER_KEYS,
+the fused kernel above that. Building the stage collects the signature
+table to the driver eagerly, at plan time, and broadcasts it. Past the
+broadcast guard (2M rows or 512 MB) or on a sid collision the stage falls
+back to the JVM shuffle verify with the m-band prefilter, so the driver
+collect stays bounded at any corpus size.
 """
 
 from __future__ import annotations
@@ -94,9 +103,11 @@ class DedupPipeline:
             "minhash_edges",
             lambda: mh.dedup_pairs(
                 mh_sigs,
+                keep_sim=False,
+                numpy_verify=True,
                 max_bucket_size=c.max_bucket_size,
                 bucket_cap_hard=c.bucket_cap_hard,
-            ).select("src", "dst"),
+            ),
             force,
         )
         edge_frames = [mh_edges]
@@ -165,6 +176,8 @@ class DedupPipeline:
                        sh: SimHashLSH | None = None,
                        sh_sigs: DataFrame | None = None) -> None:
         """North rule: per-partition lineage, rows/sec, skew metrics tables."""
+        import pandas as pd
+
         man = self.wh.manifest()["stages"]
         rows = [
             (s, str(i.get("table")), int(i.get("rows") or 0),
@@ -172,8 +185,12 @@ class DedupPipeline:
             for s, i in man.items()
             if not s.startswith("labels_iter")
         ]
+        # a pandas frame rides the Arrow path; a plain list would go
+        # through a Python RDD and spawn Python workers for a handful of rows
+        cols = ["stage", "table", "rows", "wall_sec", "rows_per_sec"]
         stage_df = self.spark.createDataFrame(
-            rows, "stage string, table string, rows long, wall_sec double, rows_per_sec double"
+            pd.DataFrame(rows, columns=cols),
+            "stage string, table string, rows long, wall_sec double, rows_per_sec double",
         )
         self.wh.write(stage_df, "metrics_stages")
 

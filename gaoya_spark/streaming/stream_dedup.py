@@ -40,6 +40,18 @@ from gaoya_spark.sources.warehouse import Warehouse
 
 
 class StreamingDedup:
+    """Incremental near-duplicate detection over micro-batches.
+
+    Edges inside a batch come from dedup_pairs(keep_sim=False,
+    numpy_verify=True): the replicated numpy kernel while the batch's
+    rows x bands <= MinHashLSH._REPL_PREFER_KEYS, the fused kernel above
+    that. process_batch collects the batch's signatures to the driver
+    eagerly, at plan time, and broadcasts them. A batch past the
+    broadcast guard (2M rows or 512 MB), or one with a sid collision,
+    falls back to the JVM shuffle verify with the m-band prefilter. Edges
+    against the standing index come from query() over the maintained
+    bands table."""
+
     def __init__(
         self,
         spark: SparkSession,
@@ -128,8 +140,9 @@ class StreamingDedup:
                 F.col("batch_id") != batch_id
             )
 
-        # edges inside the batch
-        edges = self.lsh.dedup_pairs(new_sigs).select("src", "dst")
+        # edges inside the batch, on the broadcast numpy kernels (see the
+        # class docstring)
+        edges = self.lsh.dedup_pairs(new_sigs, keep_sim=False, numpy_verify=True)
         if index is not None:
             # edges between batch and the standing index (probe = new rows)
             vs_index = (

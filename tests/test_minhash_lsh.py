@@ -531,9 +531,46 @@ def test_fused_dedup_matches_jvm_all_tiers(spark):
     assert forced == jvm
 
 
+def test_bucket_cap_hard_excludes_identically_across_strategies(spark):
+    """Buckets over bucket_cap_hard are excluded by every strategy (and
+    counted as n_dropped by band_stats): with the cap below a planted
+    family's size, the replicated, fused and JVM paths must return the
+    same pair set, and it must lack the family's pairs."""
+    cfg = MinHashConfig(num_bands=8, band_width=2, threshold=0.5, tokenizer=WORD)
+    lsh = MinHashLSH(cfg)
+    rows = [(i, "alpha beta gamma delta epsilon zeta eta theta") for i in range(6)]
+    rows += [(10 + i, "red green blue cyan magenta yellow black white") for i in range(3)]
+    rows += [(20, "one two three four five six seven eight"),
+             (21, "one two three four five six seven nine"),
+             (30, "a lone document about volcanoes and lava")]
+    sigs = lsh.signatures(
+        spark.createDataFrame(rows, "id long, text string"), "id", "text"
+    ).cache()
+    family = {(a, b) for a in range(6) for b in range(6) if a < b}
+
+    def pairs(small, **kw):
+        out = lsh.dedup_pairs(
+            sigs, keep_sim=False, bucket_cap_hard=4, max_bucket_size=small, **kw
+        )
+        return {(r["src"], r["dst"]) for r in out.collect()}
+
+    # the cap above and below the direct-pairing tier's size limit
+    for small in (2, 16):
+        jvm = pairs(small)
+        assert pairs(small, numpy_verify="replicated") == jvm, small
+        assert pairs(small, numpy_verify="fused") == jvm, small
+        assert not (jvm & family), small
+        assert {(10, 11), (10, 12), (11, 12)} <= jvm, small
+    dropped = lsh.band_stats(lsh.bands(sigs), bucket_cap_hard=4).agg(
+        F.sum("n_dropped")
+    ).collect()[0][0]
+    assert dropped == cfg.num_bands
+
+
 @pytest.mark.parametrize("strategy", [
     {}, {"numpy_verify": True}, {"numpy_verify": "fused"},
     {"numpy_verify": True, "raw_candidates": True},
+    {"numpy_verify": "replicated"},
 ])
 def test_dedup_strategies_empty_and_singleton(spark, strategy):
     """Every dedup strategy must return an empty (src, dst) frame — with
@@ -580,6 +617,7 @@ def test_query_with_precomputed_index_bands(spark, corpus5):
     {"numpy_verify": True},
     {"numpy_verify": "fused"},
     {"numpy_verify": True, "raw_candidates": True},
+    {"numpy_verify": "replicated"},
 ])
 def test_broadcast_guard_boundary_identical_pairs(spark, corpus5, strategy):
     """Pin the broadcast row bound below the corpus size THROUGH THE
@@ -674,15 +712,15 @@ def test_sketch_eq_upper_bound_expression():
 
 
 def test_numpy_strategy_values_identical(spark, corpus5):
-    """r6: numpy_verify accepts True (adaptive raw/fused via the
-    driver-side density probe) and explicit "agg" | "raw" | "fused" —
-    every value must yield the exact JVM-path pair set, and an unknown
-    value must raise."""
+    """numpy_verify accepts True (adaptive by key count: replicated while
+    rows * num_bands <= _REPL_PREFER_KEYS, fused above) and explicit
+    "agg" | "raw" | "fused" | "replicated" — every value must yield the
+    exact JVM-path pair set, and an unknown value must raise."""
     import pytest
 
     lsh, sigs = corpus5
     base = {(r["src"], r["dst"]) for r in lsh.dedup_pairs(sigs).collect()}
-    for nv in (True, "agg", "raw", "fused"):
+    for nv in (True, "agg", "raw", "fused", "replicated"):
         got = {
             (r["src"], r["dst"])
             for r in lsh.dedup_pairs(sigs, keep_sim=False, numpy_verify=nv).collect()

@@ -17,13 +17,21 @@ def images(spark):
     return df, truth
 
 
-def test_pipeline_recall_gate(spark, images, tmp_path_factory):
+@pytest.fixture(scope="module")
+def default_run(spark, images, tmp_path_factory):
+    """One default-config pipeline run over the fixture, shared by the
+    tests that only read its tables."""
+    df, _ = images
+    pipe = DedupPipeline(spark, str(tmp_path_factory.mktemp("wh_default")))
+    clusters = pipe.run(df)
+    return pipe, clusters
+
+
+def test_pipeline_recall_gate(spark, images, default_run):
     """BASELINE.md acceptance: dup-pair recall >= 0.99 against the planted
     near-duplicate groups at the reference band config."""
     df, truth = images
-    wh = str(tmp_path_factory.mktemp("wh_recall"))
-    pipe = DedupPipeline(spark, wh)
-    clusters = pipe.run(df)
+    pipe, clusters = default_run
     labels = pipe.wh.read("labels")
     recall = duplicate_pair_recall(
         labels, truth.withColumnRenamed("image_id", "id"), "id", "group_id"
@@ -51,13 +59,31 @@ def test_pipeline_twophase_clustering_same_labels(spark, images, tmp_path_factor
     assert a == b
 
 
-def test_pipeline_precision_sanity(spark, images, tmp_path_factory):
+def test_minhash_edges_match_jvm_verify(spark, default_run):
+    """The minhash_edges stage runs on the broadcast numpy kernels; its
+    pair set must equal the JVM join verify (dedup_pairs with the default
+    keep_sim=True) over the stage's own minhash_signatures table, on
+    string ids."""
+    from gaoya_spark.operators.minhash_lsh import MinHashLSH
+
+    pipe, _ = default_run
+    sigs = pipe.wh.read("minhash_signatures")
+    assert dict(sigs.dtypes)["id"] == "string"
+    jvm = MinHashLSH(pipe.cfg.minhash).dedup_pairs(
+        sigs,
+        max_bucket_size=pipe.cfg.max_bucket_size,
+        bucket_cap_hard=pipe.cfg.bucket_cap_hard,
+    )
+    want = {(r["src"], r["dst"]) for r in jvm.collect()}
+    got = {(r["src"], r["dst"]) for r in pipe.wh.read("minhash_edges").collect()}
+    assert got == want and want
+
+
+def test_pipeline_precision_sanity(spark, images, default_run):
     """Not a gaoya gate, but guard against everything collapsing into one
     blob: predicted duplicate pairs should be mostly true pairs."""
     df, truth = images
-    wh = str(tmp_path_factory.mktemp("wh_prec"))
-    pipe = DedupPipeline(spark, wh)
-    pipe.run(df)
+    pipe, _ = default_run
     labels = pipe.wh.read("labels")
     t = truth.withColumnRenamed("image_id", "id")
     joined = labels.join(t, "id")

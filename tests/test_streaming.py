@@ -70,6 +70,38 @@ def test_process_batch_replay_is_idempotent(spark, tmp_path):
     ) == labels_once
 
 
+def test_process_batch_edges_match_jvm_in_batch_path(spark, tmp_path):
+    """In-batch edges run on the broadcast numpy kernels; two
+    process_batch calls must land the same stream_edges as the JVM join
+    verify in-batch path plus the index probe, on string ids with
+    groups split across the two batches."""
+    from gaoya_spark.fixtures import make_images_pdf
+
+    pdf, _ = make_images_pdf(80, seed=5, dup_frac=0.5, with_bytes=False)
+    pdf = pdf.sample(frac=1.0, random_state=3)[["image_id", "caption", "phash"]]
+    batches = [spark.createDataFrame(pdf.iloc[:40]), spark.createDataFrame(pdf.iloc[40:])]
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    sd = StreamingDedup(spark, wh, CFG)
+    for b, df in enumerate(batches):
+        sd.process_batch(df, b)
+
+    lsh = sd.lsh
+    sigs = [lsh.signatures(df, "image_id", "caption", phash_col="phash") for df in batches]
+    for b, sig in enumerate(sigs):
+        want = {(r["src"], r["dst"]) for r in lsh.dedup_pairs(sig).collect()}
+        if b:
+            want |= {
+                (r["qid"], r["id"])
+                for r in lsh.query(sigs[0], sig, keep_sim=False).collect()
+                if r["qid"] != r["id"]
+            }
+        got = {
+            (r["src"], r["dst"])
+            for r in wh.read("stream_edges").where(F.col("batch_id") == b).collect()
+        }
+        assert got == want and want, b
+
+
 def test_file_stream_available_now(spark, tmp_path):
     src = tmp_path / "incoming"
     os.makedirs(src)
