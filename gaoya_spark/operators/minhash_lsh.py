@@ -237,9 +237,47 @@ def _bucket_verify_fn(bc, need, max_pairs: int = 4_000_000):
 _SET_ID_SALT = 0x51C3_9A7B_42D8_11E5
 
 
-def _replicated_dedup_fn(
-    bc, need, b, r, n_parts, bucket_cap_hard: int, max_pairs: int = 4_000_000
-):
+def _band_keys(mat_b, r, lo, hi):
+    """(n, hi - lo) band keys of bands lo..hi-1 of a signature matrix: the
+    same splitmix64 fold as _sid_bands_arrow, vectorized over rows."""
+    import numpy as np
+
+    from gaoya_spark import hashing
+
+    seeds = hashing.splitmix64(np.arange(lo, hi, dtype=np.int64))
+    acc = np.broadcast_to(seeds, (mat_b.shape[0], hi - lo)).copy()
+    for j in range(r):
+        # strided column slice: fold step j touches position i*r+j of
+        # band i — the (n, bands) slice is copied per step instead of
+        # materializing the whole matrix as a (n, bands, r) uint64 tile
+        # (4x the bytes when signatures are int32; peak memory stays ~2
+        # key matrices regardless of k)
+        acc = hashing.splitmix64(
+            (acc ^ mat_b[:, lo * r + j : hi * r : r].astype(np.uint64)).view(
+                np.int64
+            )
+        )
+    return acc
+
+
+def _max_kept_bucket(mat_b, b, r, bucket_cap_hard) -> int:
+    """Size of the largest band bucket of a signature matrix that is not
+    over bucket_cap_hard (larger buckets are excluded by every path).
+    One band at a time, so memory stays O(rows)."""
+    import numpy as np
+
+    best = 0
+    for j in range(b):
+        sk = np.sort(_band_keys(mat_b, r, j, j + 1)[:, 0])
+        cut = np.flatnonzero(sk[1:] != sk[:-1]) + 1
+        sizes = np.diff(np.concatenate([[0], cut, [len(sk)]]))
+        kept = sizes[sizes <= bucket_cap_hard]
+        if len(kept):
+            best = max(best, int(kept.max()))
+    return best
+
+
+def _replicated_dedup_fn(bc, need, b, r, n_parts, bucket_cap_hard, max_pairs):
     """mapInPandas kernel over a 1-row-per-partition range frame: the
     FULLY-REPLICATED dedup. Every task recomputes the corpus's band keys
     from the broadcast signature matrix (the same splitmix64 fold as
@@ -250,7 +288,9 @@ def _replicated_dedup_fn(
     independently salted xor-reduceats over member hashes — the same
     no-collision guarantee class as the substring gram fingerprints),
     local lexsort dedup, then vectorized triu pair generation + verify
-    against the broadcast matrix, chunked to max_pairs per flush.
+    against the broadcast matrix, chunked to max_pairs per flush (a
+    bucket never splits across flushes; _replicated_dedup only runs the
+    kernel when every kept bucket's triangle fits one flush).
 
     Replication trades ~0.2-0.5s of redundant vectorized key computation
     per task for the ENTIRE bucket dataflow: no band explode, no bucket
@@ -282,20 +322,7 @@ def _replicated_dedup_fn(
         n = len(sids_b)
         memb_parts, len_parts = [], []
         if n >= 2:
-            seeds = hashing.splitmix64(np.arange(b, dtype=np.int64))
-            acc = np.broadcast_to(seeds, (n, b)).copy()
-            for j in range(r):
-                # strided column slice: fold step j touches position
-                # i*r+j of band i, i.e. columns j::r — the (n, b) slice
-                # is copied per step instead of materializing the whole
-                # matrix as a (n, b, r) uint64 tile (4x the bytes when
-                # signatures are int32; peak per-task memory stays ~2
-                # key matrices regardless of k)
-                acc = hashing.splitmix64(
-                    (acc ^ mat_b[:, j : b * r : r].astype(np.uint64)).view(
-                        np.int64
-                    )
-                )
+            acc = _band_keys(mat_b, r, 0, b)
             for j in range(b):
                 col = acc[:, j]
                 o = np.argsort(col)
@@ -868,15 +895,23 @@ class MinHashLSH:
     # whose per-task memory does not scale with the corpus.
     _REPL_MAX_KEYS = 32_000_000
 
+    # replicated-kernel per-flush pair bound (as _bucket_verify_fn's
+    # max_pairs). A bucket never splits across flushes, so a corpus whose
+    # largest kept bucket has more pairs than this goes to the fused path,
+    # which sends buckets over medium_bucket_size to the JVM triangle
+    # block join (e.g. a 30k-doc boilerplate family: 4.5e8 pairs, ~7GB
+    # per index array in one replicated flush).
+    _REPL_MAX_FLUSH_PAIRS = 4_000_000
+
     def _replicated_dedup(
         self,
         sig_df: DataFrame,
         threshold: float,
+        bucket_cap_hard: int,
         max_rows: int = 2_000_000,
         persist: bool = True,
         bc=None,
         parallelism: int | None = None,
-        bucket_cap_hard: int = 100_000,
     ) -> DataFrame | None:
         """Fully-replicated dedup (see _replicated_dedup_fn): every task
         rebuilds the corpus's bucket structure from the broadcast matrix
@@ -890,9 +925,11 @@ class MinHashLSH:
         path.
 
         Same guards as every numpy strategy (broadcast bound, sid
-        collision) plus its own key-count bound (_REPL_MAX_KEYS); returns
-        None when any guard trips. parallelism defaults to the session's
-        defaultParallelism — scale-adaptive, never a local constant."""
+        collision) plus its own key-count bound (_REPL_MAX_KEYS) and
+        bucket bound (_REPL_MAX_FLUSH_PAIRS, checked on the driver over
+        the broadcast matrix); returns None when any guard trips.
+        parallelism defaults to the session's defaultParallelism —
+        scale-adaptive, never a local constant."""
         if persist and not _is_materialized(sig_df):
             sig_df = sig_df.persist()
         if bc is None:
@@ -903,13 +940,18 @@ class MinHashLSH:
         b, r = self.cfg.num_bands, self.cfg.band_width
         if n * b > self._REPL_MAX_KEYS:
             return None
+        s = _max_kept_bucket(bc.value[1], b, r, bucket_cap_hard)
+        if s * (s - 1) // 2 > self._REPL_MAX_FLUSH_PAIRS:
+            return None
         spark = sig_df.sparkSession
         p = parallelism or spark.sparkContext.defaultParallelism or 8
         need = _min_eq_count(threshold, self.cfg.num_hashes)
         id_sql = sig_df.schema["id"].dataType.simpleString()
         base = spark.range(0, p, 1, p)
         survivors = base.mapInPandas(
-            _replicated_dedup_fn(bc, need, b, r, p, bucket_cap_hard),
+            _replicated_dedup_fn(
+                bc, need, b, r, p, bucket_cap_hard, self._REPL_MAX_FLUSH_PAIRS
+            ),
             "src long, dst long",
         )
         # explicit p-partition hash repartition on the dedup key: the
@@ -1096,8 +1138,11 @@ class MinHashLSH:
         kernel — same small-table scale guard as broadcast_sigs. Values:
           True    — ADAPTIVE (r6): the "replicated" kernel while the
                     per-task replication work is trivial (rows *
-                    num_bands <= _REPL_PREFER_KEYS), the "fused" kernel
-                    past that bound — fused measured fastest or tied on
+                    num_bands <= _REPL_PREFER_KEYS) and every kept
+                    bucket's pairs fit one flush (_REPL_MAX_FLUSH_PAIRS),
+                    the "fused" kernel past either bound (its hot tier
+                    blocks large buckets in the JVM triangle join) —
+                    fused measured fastest or tied on
                     both bench densities once replication starts
                     contending for memory bandwidth (see
                     _REPL_PREFER_KEYS comment). Results identical
@@ -1107,7 +1152,9 @@ class MinHashLSH:
                     hash-partition of DISTINCT member sets
                     (_replicated_dedup): the only exchange in the plan
                     is the survivor dropDuplicates. Bounded by
-                    _REPL_MAX_KEYS on top of the broadcast guards.
+                    _REPL_MAX_KEYS and _REPL_MAX_FLUSH_PAIRS on top of
+                    the broadcast guards (past them: JVM shuffle
+                    verify).
           "agg"   — aggregated candidates + m-band prefilter kernel (the
                     pre-r6 numpy_verify=True plan).
           "raw"   — raw band emissions stream into the verify kernel,
@@ -1152,8 +1199,9 @@ class MinHashLSH:
         if numpy_verify and not keep_sim:
             # strategy resolution: True = ADAPTIVE by key count — the
             # replicated kernel while rows * num_bands <=
-            # _REPL_PREFER_KEYS, the fused kernel above it (exact results
-            # either way); "agg" | "raw" | "fused" | "replicated" force a
+            # _REPL_PREFER_KEYS (and its bucket bound holds), the fused
+            # kernel otherwise (exact results either way); "agg" | "raw"
+            # | "fused" | "replicated" force a
             # specific plan. raw_candidates=True with numpy_verify=True
             # keeps meaning "raw" (back-compat with existing callers).
             nv = numpy_verify
@@ -1199,9 +1247,9 @@ class MinHashLSH:
                     # best (2.7s vs fused 5.2) to tied (6.5 vs 6.6) on
                     # the 5k-doc bench corpus across sessions.
                     out = self._replicated_dedup(
-                        sig_df, t, max_rows=numpy_max_rows,
+                        sig_df, t, kw.get("bucket_cap_hard", 100_000),
+                        max_rows=numpy_max_rows,
                         persist=kw.get("persist", True), bc=bc,
-                        bucket_cap_hard=kw.get("bucket_cap_hard", 100_000),
                     )
                     if out is not None:
                         return out

@@ -20,13 +20,12 @@ only quadratic-risk stage and are guarded by hot-bucket triangle blocking.
 Labels iterate over edges only (bytes untouched). The optional PSNR/caption
 invariant check (verify_invariants) decodes pixels for a sampled fraction.
 
-MinHash edges come from dedup_pairs(keep_sim=False, numpy_verify=True):
-the replicated kernel while rows x bands <= MinHashLSH._REPL_PREFER_KEYS,
-the fused kernel above that. Building the stage collects the signature
-table to the driver eagerly, at plan time, and broadcasts it. Past the
-broadcast guard (2M rows or 512 MB) or on a sid collision the stage falls
-back to the JVM shuffle verify with the m-band prefilter, so the driver
-collect stays bounded at any corpus size.
+MinHash edges come from dedup_pairs(keep_sim=False, numpy_verify=True),
+whose adaptive rule (see MinHashLSH.dedup_pairs) runs the replicated or
+the fused numpy kernel. Building the stage collects the signature table
+to the driver eagerly, at plan time, and broadcasts it; past the
+broadcast guard the stage falls back to the JVM shuffle verify, so the
+driver collect stays bounded at any corpus size.
 """
 
 from __future__ import annotations

@@ -43,14 +43,12 @@ class StreamingDedup:
     """Incremental near-duplicate detection over micro-batches.
 
     Edges inside a batch come from dedup_pairs(keep_sim=False,
-    numpy_verify=True): the replicated numpy kernel while the batch's
-    rows x bands <= MinHashLSH._REPL_PREFER_KEYS, the fused kernel above
-    that. process_batch collects the batch's signatures to the driver
-    eagerly, at plan time, and broadcasts them. A batch past the
-    broadcast guard (2M rows or 512 MB), or one with a sid collision,
-    falls back to the JVM shuffle verify with the m-band prefilter. Edges
-    against the standing index come from query() over the maintained
-    bands table."""
+    numpy_verify=True), whose adaptive rule (see MinHashLSH.dedup_pairs)
+    runs the replicated or the fused numpy kernel. process_batch collects
+    the batch's signatures to the driver eagerly, at plan time, and
+    broadcasts them; a batch past the broadcast guard falls back to the
+    JVM shuffle verify. Edges against the standing index come from
+    query() over the maintained bands table."""
 
     def __init__(
         self,

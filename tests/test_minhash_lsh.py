@@ -567,6 +567,60 @@ def test_bucket_cap_hard_excludes_identically_across_strategies(spark):
     assert dropped == cfg.num_bands
 
 
+def test_replicated_bucket_bound_routes_hot_family_to_fused(spark, monkeypatch):
+    """The replicated kernel builds a bucket's whole triangle in one
+    flush, so the adaptive rule must not run it when a kept bucket has
+    more pairs than _REPL_MAX_FLUSH_PAIRS. With the bound lowered below a
+    planted identical family's pair count, the pipeline's call falls to
+    the fused path (family in its JVM triangle hot tier) and still
+    returns the JVM pair set; buckets over bucket_cap_hard don't count."""
+    cfg = MinHashConfig(num_bands=8, band_width=2, threshold=0.5, tokenizer=WORD)
+    lsh = MinHashLSH(cfg)
+    rows = [(i, "alpha beta gamma delta epsilon zeta eta theta") for i in range(12)]
+    rows += [(20, "one two three four five six seven eight"),
+             (21, "one two three four five six seven nine"),
+             (30, "a lone document about volcanoes and lava")]
+    sigs = lsh.signatures(
+        spark.createDataFrame(rows, "id long, text string"), "id", "text"
+    ).cache()
+    family = {(a, b) for a in range(12) for b in range(12) if a < b}
+
+    calls = []
+    real_repl, real_fused = MinHashLSH._replicated_dedup, MinHashLSH._fused_dedup
+
+    def repl(self, *a, **k):
+        out = real_repl(self, *a, **k)
+        calls.append(("replicated", out is not None))
+        return out
+
+    def fused(self, *a, **k):
+        calls.append(("fused", True))
+        return real_fused(self, *a, **k)
+
+    monkeypatch.setattr(MinHashLSH, "_replicated_dedup", repl)
+    monkeypatch.setattr(MinHashLSH, "_fused_dedup", fused)
+
+    def pairs(cap, **kw):
+        out = lsh.dedup_pairs(
+            sigs, max_bucket_size=4, medium_bucket_size=8, bucket_cap_hard=cap, **kw
+        )
+        return {(r["src"], r["dst"]) for r in out.collect()}
+
+    jvm = pairs(100_000)
+    assert family | {(20, 21)} <= jvm
+    assert pairs(100_000, keep_sim=False, numpy_verify=True) == jvm
+    assert calls == [("replicated", True)]
+
+    calls.clear()
+    monkeypatch.setattr(MinHashLSH, "_REPL_MAX_FLUSH_PAIRS", len(family) - 1)
+    assert pairs(100_000, keep_sim=False, numpy_verify=True) == jvm
+    assert calls == [("replicated", False), ("fused", True)]
+
+    calls.clear()
+    assert pairs(8, keep_sim=False, numpy_verify=True) == pairs(8) == {(20, 21)}
+    assert calls == [("replicated", True)]
+
+
 @pytest.mark.parametrize("strategy", [
     {}, {"numpy_verify": True}, {"numpy_verify": "fused"},
     {"numpy_verify": True, "raw_candidates": True},
